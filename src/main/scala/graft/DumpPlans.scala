@@ -54,28 +54,24 @@ object DumpPlans {
     sb.append("# PLANS — formatted physical plans (generated by graft.DumpPlans)\n\n")
     sb.append("Evidence that the declarative design claims hold in actual plans:\n")
     sb.append("`PushedFilters`/`ReadSchema` show scan-level pushdown and pruning;\n")
-    sb.append("`BroadcastHashJoin` for small dims; single-aggregation CDC fold.\n")
+    sb.append("`BroadcastHashJoin` for small dims; single-sort window CDC fold.\n")
     picks.foreach { case (name, why) =>
       sb.append(s"\n## $name — $why\n\n```\n")
       sb.append(fmt(SparkEntry.queries(name)(spark, dir)).take(4500))
       sb.append("\n```\n")
     }
 
-    // the engine fold + merge plan
+    // the engine fold plan
     import TestHelpersMain._
     val events = demoEvents(spark)
     val wipes = graft.operators.MergeEngine.seriesWipes(events)
-    sb.append("\n## MergeEngine.netActionsViaWindow — the DEFAULT per-key fold (r06): ONE exchange,\n")
-    sb.append("ONE sort of the payload, one Window pass (row_number picks the key's last event,\n")
-    sb.append("an unbounded-frame max picks the anchor) — vs the aggregate fold's partial+final\n")
-    sb.append("SortAggregate pair, which sorts the payload twice\n\n```\n")
-    sb.append(fmt(graft.operators.MergeEngine.netActionsViaWindow(events, wipes)).take(4500))
-    sb.append("\n```\n")
-    sb.append("\n## MergeEngine.netActions — the aggregate fold (foldStrategy=\"agg\": the\nheavy-re-delivery alternative — map-side combine collapses duplicates pre-shuffle)\n\n```\n")
+    sb.append("\n## MergeEngine.netActions — the per-key fold: ONE exchange, ONE sort of the\n")
+    sb.append("payload, one Window pass (row_number picks the key's last event, an\n")
+    sb.append("unbounded-frame max picks the anchor)\n\n```\n")
     sb.append(fmt(graft.operators.MergeEngine.netActions(events, wipes)).take(4500))
     sb.append("\n```\n")
     sb.append("\n## MergeEngine.netActions — opt-in bucket alignment (ONE payload exchange:\n")
-    sb.append("the REPARTITION_BY_NUM onto the bucket key; the (bucket, key) aggregation and\n")
+    sb.append("the REPARTITION_BY_NUM onto the bucket key; the (bucket, key) window and\n")
     sb.append("the per-bucket delta write then run partition-local, no further exchange —\n")
     sb.append("the cross-node-traffic-halving plan for network-shuffle clusters; see\n")
     sb.append("MergeSpec.foldAlignment for why the single-socket default is \"key\")\n\n```\n")

@@ -141,7 +141,7 @@ object ScalingBench {
       sb.append("\n")
       Seq(effLine(2, 8), effLine(8, 32)).flatten.foreach(l => sb.append(l + "\n"))
       sb.append("\nThe replay is the full pipeline: parquet log scan → validate →\n")
-      sb.append("per-key fold (single-pass aggregation) → merge-on-read delta\n")
+      sb.append("per-key fold (single-sort window) → merge-on-read delta\n")
       sb.append("append + atomic snapshot commit with per-partition lineage.\n")
       sb.append("Shuffle partitions = 3× core count; AQE on; committer v2.\n")
       Files.writeString(Paths.get(s"$benchDir/scaling-latest.md"), sb.toString)

@@ -12,7 +12,7 @@ import graft.table.IceLite
 object SparkEntry {
 
   /** Flagship: the full CDC engine end-to-end — deterministic change-event
-    * log → per-key fold → bucket-pruned copy-on-write merge → IceLite
+    * log → per-key fold → merge-on-read delta commit → IceLite
     * snapshot → latest-state read-back. Driver smoke-checks rows > 0.
     */
   def entry(spark: SparkSession): DataFrame = {

@@ -5,9 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.model.NetAction
 
-/** The CDC merge engine: turns a micro-batch of change events into the
-  * minimal set of per-key net effects, then rewrites only the affected
-  * hash buckets of the base table (copy-on-write MERGE).
+/** The CDC fold: turns a micro-batch of change events into the minimal
+  * set of per-key net effects, which [[CdcApply]] appends as delta files.
   *
   * Semantics reproduced from the reference connector (SURVEY.md §2.A):
   *  - per-key sequential application in offset order
@@ -23,18 +22,17 @@ import graft.model.NetAction
   *    turn_idx == null ⇒ series delete of the whole conversation
   *    (README.md:126-137).
   *
-  * Scale design: the fold is ONE hash aggregation on (conv_id, turn_idx)
-  * built from conditional `max_by`s — whole-stage-codegen'd, with
-  * map-side partial aggregation, so a hot conversation (Zipf skew) is
-  * spread over its turns and a hot turn collapses map-side before the
-  * shuffle. No per-group buffering or sorting anywhere. This is what
-  * replaces the reference's in-memory buffer at 10^10-event scale.
+  * Scale design: the fold is ONE exchange on (conv_id, turn_idx), ONE
+  * sort and one Window pass — no per-group buffering beyond the window
+  * frame. The exchange key spreads a hot conversation (Zipf skew) over
+  * its turns (SkewSpec pins it). This is what replaces the reference's
+  * in-memory buffer at 10^10-event scale.
   *
   * Order authority: `offset` (strictly increasing per log partition;
   * a conversation is keyed to one partition, so per-key offsets are
   * totally ordered — the Connect delivery contract). Duplicate delivery
-  * of the same offset is naturally idempotent: `max_by` picks one of two
-  * identical rows.
+  * of the same offset is naturally idempotent: offset ties are identical
+  * rows, so either pick is the same row.
   */
 object MergeEngine {
 
@@ -45,9 +43,6 @@ object MergeEngine {
   def bucketOf(convId: Column, numBuckets: Int): Column =
     graft.table.IceLite.bucketOf(convId, numBuckets)
 
-  /** Columns of the transcript row struct, in table order. */
-  val turnCols: Seq[String] = Seq("conv_id", "turn_idx", "role", "text", "tool", "ts")
-
   // ---------------------------------------------------------------------
   // Validation (reference RecordValidator, `.../sink/RecordValidator.java:44-117`
   // and null-key binder checks `.../sink/PreparedStatementBinder.java:174-196`).
@@ -55,8 +50,6 @@ object MergeEngine {
   // the batch proceeds (errant-record-reporter semantics,
   // `.../sink/JdbcSinkTaskTest.java:324-492`).
   // ---------------------------------------------------------------------
-  final case class ValidatedBatch(valid: DataFrame, rejected: DataFrame)
-
   /** Adds a nullable `_error` column (null = valid). A `_extract_error`
     * column (attached by CdcApply's ingest-time extraction: cast failure,
     * unmatched payload schema) is folded in and dropped.
@@ -75,20 +68,13 @@ object MergeEngine {
     if (hasExtract) tagged.drop("_extract_error") else tagged
   }
 
-  def validate(events: DataFrame, deleteEnabled: Boolean = true): ValidatedBatch = {
-    val tagged = tagErrors(events, deleteEnabled)
-    ValidatedBatch(
-      valid = tagged.filter(col("_error").isNull).drop("_error"),
-      rejected = tagged.filter(col("_error").isNotNull))
-  }
-
   /** Latest series-delete offset per conversation in this batch.
     * Only the max matters: a series delete at offset D makes every prior
     * event of the conversation irrelevant (state is known-Absent at D),
     * so intermediate wipes are subsumed. Tiny output — broadcastable.
     *
     * `parts`: explicit partition count for the aggregation exchange.
-    * The caller that PERSISTS this frame (CdcApply's MOR path) wants it:
+    * The caller that PERSISTS this frame (CdcApply) wants it:
     * persist pins the plan's output partitioning (AQE coalescing is off
     * under caching — `canChangeCachedPlanOutputPartitioning` defaults
     * false), so the default `spark.sql.shuffle.partitions`-wide exchange
@@ -109,132 +95,52 @@ object MergeEngine {
   /** Per-(conv_id, turn_idx) net action of the batch.
     *
     * Derivation (provably order-equivalent to the sequential per-key fold,
-    * pinned by ReplayEquivalenceSpec): after discarding events at or
-    * before the conversation's last series wipe D,
+    * pinned by ReplayEquivalenceSpec against OracleFold): after discarding
+    * events at or before the conversation's last series wipe D,
     *  - the ANCHOR is the turn's last non-update event (insert/upsert/
     *    delete). It fully determines existence: a later update only
     *    changes values, never existence;
     *  - anchor = delete            ⇒ Del (updates after a delete drop);
     *  - anchor = insert/upsert     ⇒ Put(last update after anchor, else anchor row);
     *  - no anchor, no wipe         ⇒ UpdateIfExists(last update) — existence
-    *    is decided by the base table at merge time;
+    *    is decided by the base table at read/compaction time;
     *  - no anchor, wiped           ⇒ Del (state was known-Absent).
     *
-    * Output: (conv_id, turn_idx, action, row struct) — one row per touched key.
-    */
-  def netActions(events: DataFrame): DataFrame =
-    netActions(events, broadcast(seriesWipes(events)))
-
-  /** As above, with a pre-computed (possibly cached) wipe set. The caller
-    * decides whether to broadcast it (CdcApply does, below its bulk-delete
-    * threshold); an unhinted wipe set joins by shuffle, and AQE still
-    * broadcasts it at runtime if it is actually small.
+    * In every live branch the winning VALUE is the after-image of the
+    * key's LAST event (anchor last ⇒ anchor row; updates after a live
+    * anchor or with no anchor ⇒ last update), so one window over
+    * (key ORDER BY offset DESC) computes all four winners in one pass:
+    *  - `row_number() = 1`  ⇒ the key's last event (value + lineage;
+    *    offset ties are duplicate deliveries of identical rows, so either
+    *    pick is the same row),
+    *  - `max(struct(offset, op)) filtered to non-updates` over the full
+    *    frame ⇒ the anchor (struct ordering compares offset first; ties
+    *    again only between identical duplicates),
+    *  - `wipe_off` is constant within a key (it joins on conv_id), so the
+    *    surviving row carries it.
+    * Physical shape: ONE exchange on the grouping key, ONE sort of the
+    * payload-bearing batch, one Window node, no aggregation (a
+    * struct-valued `max_by` aggregation plans as SortAggregate and sorts
+    * the payload twice, map-side partial + reduce-side final).
+    *
+    * `wipes`: the batch's series wipes ([[seriesWipes]]). The caller
+    * decides whether to broadcast them (CdcApply does, below its
+    * bulk-delete threshold); an unhinted wipe set joins by shuffle, and
+    * AQE still broadcasts it at runtime if it is actually small.
     *
     * `bucketed = Some(n)`: BUCKET-ALIGNED fold. The batch is exchanged
     * ONCE onto the table's bucket key (`bucketOf(conv_id) % n`) before
-    * the fold, the fold groups on (bucket, key) — HashPartitioning(bucket)
-    * satisfies the agg's ClusteredDistribution because bucket is one of
-    * the grouping keys — and the output carries `bucket`, already laid
-    * out for a per-bucket delta write with NO further exchange. The
-    * payload crosses the wire exactly once per epoch (key-aligned plans
-    * cross twice: fold exchange + write redistribution). Trade-off: the
-    * bucket exchange moves RAW events, so map-side partial aggregation
-    * no longer collapses duplicates pre-shuffle — prefer key alignment
-    * when re-delivery duplication exceeds ~2x (see MergeSpec.foldAlignment).
+    * the fold, which partitions on (bucket, key) — HashPartitioning(bucket)
+    * satisfies the window's ClusteredDistribution because bucket is a
+    * prefix of the partition spec — and the output carries `bucket`,
+    * already laid out for a per-bucket delta write with NO further
+    * exchange (see MergeSpec.foldAlignment).
+    *
+    * Output: (conv_id, turn_idx, action, row struct, src_offset,
+    * src_partition) — one row per touched key, `bucket` first when aligned.
     */
   def netActions(events: DataFrame, wipes: DataFrame,
                  bucketed: Option[Int] = None): DataFrame = {
-    val turnEvents0 = events
-      .filter(col("turn_idx").isNotNull)
-      .join(wipes, Seq("conv_id"), "left")
-      .filter(col("offset") > coalesce(col("wipe_off"), lit(Long.MinValue)))
-    // repartition AFTER the wipe join: a bulk (non-broadcast) wipe join
-    // exchanges on conv_id anyway; aligning before it would add a third
-    // payload crossing instead of removing one
-    val turnEvents = bucketed match {
-      case Some(n) => turnEvents0
-        .withColumn("bucket", bucketOf(col("conv_id"), n))
-        .repartition(n, col("bucket"))
-      case None => turnEvents0
-    }
-    val groupCols = bucketed.map(_ => "bucket").toSeq ++ Seq("conv_id", "turn_idx")
-
-    val isUpd = col("op") === "update"
-    val anchorOff = when(!isUpd, col("offset"))
-
-    // The payload rides through the aggregation exactly ONCE: in every
-    // branch of the derivation the winning VALUE is the after-image of
-    // the key's LAST event —
-    //   anchor last (insert/upsert)        ⇒ anchor row = last row;
-    //   update(s) after a live anchor      ⇒ last update = last row;
-    //   updates only (no anchor)           ⇒ last update = last row;
-    //   anchor = delete                    ⇒ row forced null below
-    //     (a later update would itself out-sequence the delete as the
-    //      value source, but the Del branch discards the value anyway).
-    // Keeping two max_by struct buffers (anchor + update) would move the
-    // payload through the partial-agg exchange twice for nothing —
-    // measured as the dominant shuffle bytes of the fold at bench scale.
-    turnEvents
-      .groupBy(groupCols.map(col): _*)
-      .agg(
-        max_by(struct(col("after").as("after"), col("partition").as("part")), col("offset"))
-          .as("last"),
-        max(col("offset")).as("last_off"),
-        max(anchorOff).as("a_off"),
-        max_by(col("op"), anchorOff).as("a_op"),
-        max(col("wipe_off")).as("wipe_off"))
-      .select(
-        (bucketed.map(_ => col("bucket")).toSeq ++ Seq(
-        col("conv_id"),
-        col("turn_idx"),
-        when(col("a_off").isNull && col("wipe_off").isNull, NetAction.UpdateIfExists)
-          .when(col("a_off").isNull, NetAction.Del)
-          .when(col("a_op") === "delete", NetAction.Del)
-          .otherwise(NetAction.Put)
-          .as("action"),
-        when(col("a_off").isNotNull && col("a_op") === "delete", lit(null))
-          .otherwise(col("last.after"))
-          .as("row"),
-        // lineage of the winning version (the reference's optional kafka
-        // coordinate columns, `.../sink/JdbcSinkConfig.java:52-59`)
-        col("last_off").as("src_offset"),
-        col("last.part").as("src_partition"))): _*)
-  }
-
-  /** Fold strategy 3 — "single-sort window". Same contract as
-    * [[netActions]] (identical output columns and values; pinned by the
-    * same oracle equivalence suites), different physical shape: ONE
-    * exchange on the grouping key, ONE sort of the payload-bearing batch,
-    * one Window pass, no aggregation at all.
-    *
-    * Why it can beat the aggregate fold: the struct-valued `max_by`
-    * forces SortAggregate, and Spark always plans the partial+final
-    * pair — the key-aligned agg fold therefore sorts the full payload
-    * TWICE (map-side sort before the partial, reduce-side sort before
-    * the final), while the partial aggregation collapses almost nothing
-    * at realistic (~2%) re-delivery duplication. A window over
-    * (key ORDER BY offset DESC) computes the same four winners —
-    *  - `row_number() = 1`  ⇒ the key's last event (value + lineage:
-    *    identical to `max_by(struct(after, part), offset)`; offset ties
-    *    are duplicate deliveries of identical rows, so either pick is
-    *    the same row),
-    *  - `max(struct(offset, op)) filtered to non-updates` over the full
-    *    frame ⇒ (a_off, a_op) (struct ordering compares offset first;
-    *    ties again only between identical duplicates),
-    *  - `wipe_off` is constant within a key (it joins on conv_id), so
-    *    the surviving row carries it —
-    * in one pass over rows sorted once. Trade-off vs "agg": the exchange
-    * carries raw rows (no map-side collapse), so prefer "agg" when
-    * re-delivery duplication is heavy (same rule as foldAlignment).
-    *
-    * `bucketed` behaves exactly as in [[netActions]]: the explicit
-    * bucket exchange satisfies the window's ClusteredDistribution
-    * (bucket is a prefix of the partition spec), so the fold stays a
-    * single-exchange plan whose output is pre-laid-out for the
-    * per-bucket delta write.
-    */
-  def netActionsViaWindow(events: DataFrame, wipes: DataFrame,
-                          bucketed: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val turnEvents0 = events
       .filter(col("turn_idx").isNotNull)
@@ -279,118 +185,5 @@ object MergeEngine {
           .as("row"),
         col("offset").as("src_offset"),
         col("partition").as("src_partition"))): _*)
-  }
-
-  /** Fold strategy 2 — "narrow agg + deciding-row fetch". The struct-valued
-    * `max_by` in [[netActions]] forces SortAggregate (struct buffers cannot
-    * hash-aggregate), which sorts the full payload-bearing batch twice.
-    * This variant keeps the aggregation ALL-PRIMITIVE (offsets + an int
-    * opcode → HashAggregate, payload never enters the agg shuffle), then
-    * fetches the single deciding event row per key with one equi-join,
-    * and dedupes re-delivered duplicates with a hash-based distinct.
-    * Semantically identical to [[netActions]] (same oracle equivalence
-    * suites run against both).
-    */
-  def netActionsViaJoin(events: DataFrame, wipes: DataFrame): DataFrame = {
-    // NOTE: bucket alignment (netActions' `bucketed`) is deliberately NOT
-    // offered here: the deciding-row fetch is a shuffled join, and Spark's
-    // co-partition rule (requireAllClusterKeysForCoPartition, default on)
-    // re-exchanges both sides on the FULL join key even when both are
-    // already partitioned by the bucket — measured as a third payload
-    // crossing, strictly worse than the key-aligned plan below.
-    val turnEvents = events
-      .filter(col("turn_idx").isNotNull)
-      .join(wipes, Seq("conv_id"), "left")
-      .filter(col("offset") > coalesce(col("wipe_off"), lit(Long.MinValue)))
-
-    val isUpd = col("op") === "update"
-    val anchorOff = when(!isUpd, col("offset"))
-    val updOff = when(isUpd, col("offset"))
-    val opInt = when(col("op") === "delete", 1).otherwise(2) // only delete-vs-write matters for the anchor
-
-    val winners = turnEvents
-      .groupBy("conv_id", "turn_idx")
-      .agg(
-        max(anchorOff).as("a_off"),
-        max_by(opInt, anchorOff).as("a_op"),
-        max(updOff).as("u_off"),
-        max(col("wipe_off")).as("wipe_off"))
-      .withColumn("action",
-        when(col("a_off").isNotNull && col("a_op") === 1, NetAction.Del)
-          .when(col("a_off").isNull && col("wipe_off").isNull, NetAction.UpdateIfExists)
-          .when(col("a_off").isNull, NetAction.Del)
-          .otherwise(NetAction.Put))
-      .withColumn("fetch_off",
-        when(col("action") === NetAction.Del, lit(null))
-          .when(col("a_off").isNull || col("u_off") > col("a_off"), col("u_off"))
-          .otherwise(col("a_off")))
-
-    val dels = winners.filter(col("action") === NetAction.Del).select(
-      col("conv_id"), col("turn_idx"), col("action"),
-      lit(null).cast(events.schema("after").dataType).as("row"),
-      greatest(col("a_off"), col("u_off")).as("src_offset"),
-      lit(null).cast("int").as("src_partition"))
-
-    val ev = turnEvents.select(
-      col("conv_id"), col("turn_idx"), col("offset"),
-      col("after"), col("partition"))
-    // SHUFFLE_HASH on the narrow winners side: a sort-merge join would
-    // sort the payload-bearing ev side — the cost this strategy removes
-    val fetched = winners.filter(col("fetch_off").isNotNull).hint("shuffle_hash").as("w")
-      .join(ev.as("e"),
-        col("w.conv_id") === col("e.conv_id") && col("w.turn_idx") === col("e.turn_idx") &&
-          col("e.offset") === col("w.fetch_off"))
-      .select(
-        col("e.conv_id").as("conv_id"), col("e.turn_idx").as("turn_idx"), col("w.action").as("action"),
-        col("e.after").as("row"),
-        col("e.offset").as("src_offset"),
-        col("e.partition").as("src_partition"))
-      // re-delivered duplicates fetch identical rows — hash distinct
-      .distinct()
-
-    fetched.unionByName(dels)
-  }
-
-  /** Copy-on-write merge of net actions (+ series wipes) into the base
-    * rows of the affected buckets. `base` must already be pruned to the
-    * affected buckets (IceLite does this); output is the complete new
-    * content of those buckets.
-    *
-    * Join shape: full-outer on the upsert key (both sides shuffled on the
-    * same key — AQE handles residual skew); the wipe set keeps whatever
-    * broadcast/shuffle hint the caller attached.
-    */
-  def merge(base: DataFrame, actions: DataFrame, wipes: DataFrame): DataFrame = {
-    val key = Seq("conv_id", "turn_idx")
-    val cols = base.columns.toSeq
-    // build the hash table on the actions side (<= one row per touched
-    // key; the base side is the whole bucket content and would pay a sort
-    // under sort-merge join)
-    val a = actions
-      .withColumnRenamed("row", "_row")
-      .hint("shuffle_hash")
-    val w = wipes.select(col("conv_id"), lit(true).as("_wiped"))
-
-    val rowCol = (name: String) =>
-      if (key.contains(name)) col(name) else col(s"_row.$name")
-
-    base
-      .withColumn("_in_base", lit(true))
-      .join(a, key, "full_outer")
-      .join(w, Seq("conv_id"), "left")
-      .withColumn(
-        "_keep",
-        when(col("action") === NetAction.Put, lit(true))
-          .when(col("action") === NetAction.Del, lit(false))
-          .when(col("action") === NetAction.UpdateIfExists, coalesce(col("_in_base"), lit(false)))
-          // no action: base row survives unless its conversation was wiped
-          .otherwise(coalesce(col("_in_base"), lit(false)) && col("_wiped").isNull))
-      .withColumn(
-        "_use_new",
-        col("action") === NetAction.Put || col("action") === NetAction.UpdateIfExists)
-      .filter(col("_keep"))
-      .select(cols.map { c =>
-        when(col("_use_new"), rowCol(c)).otherwise(col(c)).as(c)
-      }: _*)
   }
 }

@@ -13,7 +13,7 @@ import graft.table.{ChangeFeed, IceLiteTable}
   * downstream analogue of the reference deployment's consumers querying
   * the landed RDBMS tables (`/root/reference/README.md:19-24`), except
   * the mirror is itself a table that further consumers can tail
-  * (mirror chains compose: every `sync` commit is a MOR commit, hence
+  * (mirror chains compose: every `sync` commit is a delta commit, hence
   * feed-readable).
   *
   * Cursor + exactly-once ride on the existing epoch machinery: each
@@ -59,9 +59,6 @@ object Mirror {
       target: IceLiteTable,
       spec: MergeSpec = MergeSpec(),
       toVersion: Long = -1L): SyncResult = {
-    require(spec.mergeStrategy == "mor",
-      "mirror targets must be merge-on-read: COW commits are not feed-readable, " +
-        "which would break mirror chaining (and the O(changes) sync cost)")
     val to = if (toVersion < 0) source.currentVersion else toVersion
     val from = cursor(source, target)
     if (from.exists(_ >= to))

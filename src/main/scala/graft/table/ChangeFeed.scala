@@ -30,10 +30,6 @@ import graft.model.NetAction
   *  - rollback (`rollbackTo`): the reverted rows were never re-written,
   *    so the range is not feed-expressible — the read throws and the
   *    consumer re-bootstraps (see [[IceLiteTable.rollback]]);
-  *  - copy-on-write apply (`bucketsRewritten`): the per-batch change
-  *    rows were folded into rewritten buckets and NOT retained — the
-  *    range is not feed-readable and the read throws (same contract as
-  *    Iceberg COW tables without a changelog).
   *
   * Scale: the version walk is a driver-side metadata fold, O(range)
   * with memoized snapshots; the data read is ONE parquet scan over
@@ -91,9 +87,9 @@ object ChangeFeed {
           "snapshot, or diff readAt states")
       else if (s.files == prev.files && s.deltas == prev.deltas) () // metadata-only
       else throw new UnsupportedOperationException(
-        s"version $v of ${table.dir} rewrote data files outside the merge-on-read/" +
-          "append paths (copy-on-write commit): its change rows were not retained. " +
-          "Use mergeStrategy=mor for feed-readable tables, or diff readAt snapshots.")
+        s"version $v of ${table.dir} rewrote data files outside the known commit kinds " +
+          "(delta apply, append, compaction, rebucket): its change rows were not retained " +
+          "— diff readAt snapshots instead.")
       prev = s
     }
 

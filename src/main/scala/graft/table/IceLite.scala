@@ -193,7 +193,7 @@ final class IceLiteTable(val dir: String) {
   /** Resolve a snapshot's table-relative file lists to absolute paths —
     * the pinned-snapshot variant of [[dataFiles]]/[[deltaFiles]], for
     * writers that must read base state and commit against the SAME
-    * snapshot (CdcApply's COW race detection).
+    * snapshot (compaction's race detection).
     */
   private[graft] def resolve(m: Map[Int, Seq[String]], buckets: Option[Set[Int]]): Seq[String] =
     m.toSeq
@@ -497,7 +497,7 @@ final class IceLiteTable(val dir: String) {
     * land with it — a redelivery of the audited batch after publish is
     * the usual no-op). Fails LOUDLY if any commit landed since the stage
     * (the audited state no longer describes current+batch): discard and
-    * re-stage — same contract as the rebucket/COW fences.
+    * re-stage — same contract as the rebucket fences.
     */
   def publishAudit(name: String): Snapshot = {
     val a = auditSnapshot(name)
@@ -543,7 +543,7 @@ final class IceLiteTable(val dir: String) {
     else MorRead.merged(spark, sch, base, deltaPaths)
   }
 
-  /** Base files only — MOR deltas NOT applied (compaction + COW internals). */
+  /** Base files only — MOR deltas NOT applied (compaction internals). */
   def readBase(spark: SparkSession, buckets: Option[Set[Int]] = None): DataFrame = {
     val files = dataFiles(buckets)
     val sch = schema

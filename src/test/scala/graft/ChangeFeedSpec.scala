@@ -7,9 +7,10 @@ import graft.operators.{CdcApply, EventLogApply}
 import graft.table.{IceLite, MorRead}
 
 /** Incremental change-data-feed reads (`IceLiteTable.readChanges`):
-  * range scoping, commit-kind handling (MOR apply / append / compaction /
-  * COW), and the defining property — applying a range's feed onto the
-  * `from` snapshot reproduces the `to` snapshot exactly.
+  * range scoping, commit-kind handling (delta apply / append / compaction,
+  * including a COW apply's two commits), and the defining property —
+  * applying a range's feed onto the `from` snapshot reproduces the `to`
+  * snapshot exactly.
   */
 class ChangeFeedSpec extends SparkSuite {
   import TestHelpers._
@@ -120,12 +121,25 @@ class ChangeFeedSpec extends SparkSuite {
     assert(st == Seq(("c1", "old", None), ("c2", "new", Some("pos"))))
   }
 
-  test("copy-on-write commits are not feed-readable and fail loudly") {
-    val dir = tmpDir("cf-cow") + "/t"
-    val t = IceLite.create(dir, turnSchema, 4)
-    CdcApply.applyBatch(spark, t, eventsDF(spark, Seq(ins(0, "c1", 0, "a"))),
-      spec = MergeSpec(mergeStrategy = "cow"), epoch = Some(("c", 0L)))
-    val e = intercept[UnsupportedOperationException](t.readChanges(spark, 1).collect())
-    assert(e.getMessage.contains("copy-on-write"))
+  test("copy-on-write commits are feed-readable: the feed equals the same batches under mor") {
+    val batches = Seq(
+      Seq(ins(0, "c1", 0, "a"), ins(1, "c2", 0, "b"), ins(2, "c2", 1, "b1")),
+      Seq(ups(3, "c1", 0, "a2"), del(4, "c2", None), ins(5, "c2", 2, "b2"), upd(6, "c3", 0, "ghost")),
+      Seq(del(7, "c1", Some(0)), ins(8, "c4", 0, "d")))
+    def feedRows(strategy: String): Seq[(String, Option[Int], String, Option[String])] = {
+      val t = IceLite.create(tmpDir(s"cf-$strategy") + "/t", turnSchema, 4)
+      batches.zipWithIndex.foreach { case (b, i) =>
+        CdcApply.applyBatch(spark, t, eventsDF(spark, b),
+          spec = mor.copy(mergeStrategy = strategy), epoch = Some(("c", i.toLong)))
+        if (strategy == "cow") assert(t.deltaFiles().isEmpty, s"cow batch $i left delta files")
+      }
+      t.readChanges(spark, 1).select("conv_id", "turn_idx", "action", "row.text").collect()
+        .map(r => (r.getString(0), Option(r.getAs[Integer](1)).map(_.toInt), r.getString(2),
+          Option(r.getString(3))))
+        .toSeq.sorted
+    }
+    val cow = feedRows("cow")
+    assert(cow.exists(_._3 == NetAction.Wipe) && cow.exists(_._3 == NetAction.Put))
+    assert(cow == feedRows("mor"))
   }
 }

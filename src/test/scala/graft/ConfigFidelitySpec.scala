@@ -154,6 +154,27 @@ class ConfigFidelitySpec extends SparkSuite {
     assert(e5.getMessage.contains("duplicate extract names"))
   }
 
+  test("an extraction-failed series delete is quarantined and wipes nothing") {
+    val dir = tmpDir("extract-wipe")
+    val table = IceLite.create(s"$dir/t", turnSchema, 4)
+    val spec = MergeSpec(extractFields = Seq(ExtractField("score", "$.score", castTo = "int")))
+    CdcApply.applyBatch(spark, table, eventsDF(spark, Seq(
+      ins(0L, "c1", 0, """{"score":1}"""), ins(1L, "c2", 0, """{"score":2}"""))),
+      spec, epoch = Some(("x", 0L)))
+    // a series delete (turn_idx null) whose payload fails extraction,
+    // beside a valid series delete
+    val badWipe = graft.model.ChangeEvent(0, 2L, ts(2), "delete", "c1", None,
+      Some(turn("c1", 0, """{"score":"nope"}""", 2)), 2)
+    val r = CdcApply.applyBatch(spark, table, eventsDF(spark, Seq(badWipe, del(3L, "c2", None))),
+      spec, epoch = Some(("x", 1L)), rejectedDir = Some(s"$dir/rej"))
+    assert(r.rejected == 1L)
+    assert(table.read(spark).select("conv_id").collect().map(_.getString(0)).toSeq == Seq("c1"),
+      "the quarantined delete must not wipe c1; the valid one wipes c2")
+    val rej = spark.read.parquet(s"$dir/rej").select("conv_id", "op", "_error").collect()
+    assert(rej.map(x => (x.getString(0), x.getString(1))).toSeq == Seq(("c1", "delete")))
+    assert(rej(0).getString(2).contains("extract cast failure"), rej(0).getString(2))
+  }
+
   test("ad-hoc (no-epoch) batches write quarantine once, after the commit (both merge strategies)") {
     for (strat <- Seq("mor", "cow")) {
       val dir = tmpDir(s"quar-adhoc-$strat")

@@ -103,7 +103,8 @@ class MergeEngineSpec extends SparkSuite {
       upd(2, "c2", 0, "cond"),                          // UpdateIfExists
       ins(3, "c3", 0, "x"), del(4, "c3", Some(0)),      // Del
       del(5, "c4", None), upd(6, "c4", 1, "ghost"))     // Del (wiped ⇒ known-absent)
-    val acts = MergeEngine.netActions(eventsDF(spark, evs))
+    val ev = eventsDF(spark, evs)
+    val acts = MergeEngine.netActions(ev, org.apache.spark.sql.functions.broadcast(MergeEngine.seriesWipes(ev)))
       .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getString(2)).toMap
     assert(acts(("c1", 0)) == NetAction.Put)
     assert(acts(("c2", 0)) == NetAction.UpdateIfExists)
@@ -152,7 +153,8 @@ object TestHelpers {
   }
 
   /** Full-stack replay: create a fresh IceLite table, apply each batch via
-    * CdcApply, read back sorted rows.
+    * CdcApply, read back sorted rows. A "cow" batch must leave no delta
+    * files behind (its compaction runs inside the apply).
     */
   def engineReplay(
       spark: SparkSession,
@@ -161,19 +163,21 @@ object TestHelpers {
       spec: MergeSpec = MergeSpec()): Seq[TranscriptTurn] = {
     val dir = java.nio.file.Files.createTempDirectory("engine-replay").toString
     val table = IceLite.create(s"$dir/t", turnSchema, numBuckets)
-    batches.foreach { b => CdcApply.applyBatch(spark, table, eventsDF(spark, b), spec = spec) }
+    batches.foreach { b =>
+      CdcApply.applyBatch(spark, table, eventsDF(spark, b), spec = spec)
+      if (spec.mergeStrategy == "cow")
+        org.scalatest.Assertions.assert(table.deltaFiles().isEmpty, "a cow batch left delta files")
+    }
     readTable(spark, table)
   }
 
   /** Both merge strategies must produce the oracle state. */
   val bothStrategies: Seq[MergeSpec] = Seq(
-    MergeSpec(mergeStrategy = "mor"), // default fold: window (netActionsViaWindow)
+    MergeSpec(mergeStrategy = "mor"),
     // aggressive compaction: exercise the delta→base fold mid-replay
     MergeSpec(mergeStrategy = "mor", morCompactThreshold = 1),
-    // bucket-aligned window fold: the single-exchange plan stays oracle-true
+    // bucket-aligned fold: the single-exchange plan stays oracle-true
     MergeSpec(mergeStrategy = "mor", foldAlignment = "bucket"),
-    // aggregate fold (the heavy-duplication alternative), both alignments
-    MergeSpec(mergeStrategy = "mor", foldStrategy = "agg"),
-    MergeSpec(mergeStrategy = "mor", foldStrategy = "agg", foldAlignment = "bucket"),
+    // the mor write plus compaction of every delta-holding bucket per batch
     MergeSpec(mergeStrategy = "cow"))
 }

@@ -122,11 +122,21 @@ class MirrorSpec extends SparkSuite {
     assert(graft.streaming.CdcStream.pinnedKeep(3, 100L, Seq.empty) == 3)
   }
 
-  test("cow targets are rejected up front") {
+  test("cow mirror of a cow source: every sync leaves the target equal to its source, delta-free") {
     val src = IceLite.create(tmpDir("mir-cow-src") + "/t", turnSchema, 4)
     val dst = IceLite.create(tmpDir("mir-cow-dst") + "/t", turnSchema, 4)
-    val e = intercept[IllegalArgumentException](
-      Mirror.sync(spark, src, dst, MergeSpec(mergeStrategy = "cow")))
-    assert(e.getMessage.contains("merge-on-read"))
+    val cow = MergeSpec(mergeStrategy = "cow")
+    val batches = Seq(
+      Seq(ins(0, "c1", 0, "a"), ins(1, "c1", 1, "a1"), ins(2, "c2", 0, "b")),
+      Seq(ups(3, "c1", 0, "a2"), del(4, "c2", None), ins(5, "c2", 1, "b2")),
+      Seq(del(6, "c1", Some(1)), upd(7, "c2", 1, "b3"), ins(8, "c3", 0, "c")))
+    batches.zipWithIndex.foreach { case (b, i) =>
+      CdcApply.applyBatch(spark, src, eventsDF(spark, b), spec = cow, epoch = Some(("s", i.toLong)))
+      val r = Mirror.sync(spark, src, dst, cow) // bootstrap first, then incremental
+      assert(!r.result.skipped && r.fromVersion.isDefined == (i > 0))
+      assert(state(dst) == state(src), s"after batch $i")
+      assert(dst.deltaFiles().isEmpty, s"cow target left delta files after sync $i")
+    }
+    assert(state(dst) == Seq(("c1", 0, "a2"), ("c2", 1, "b3"), ("c3", 0, "c")))
   }
 }

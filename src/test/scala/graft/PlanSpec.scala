@@ -34,33 +34,15 @@ class PlanSpec extends SparkSuite {
     assert(plan.contains("WholeStageCodegen") || plan.contains("*("), plan.take(1500))
   }
 
-  test("the CDC fold hash-aggregates and never sorts the payload (fold=join)") {
-    import TestHelpers._
-    val events = eventsDF(spark, Seq(ins(0, "c1", 0, "a"), upd(1, "c1", 0, "b")))
-    val wipes = graft.operators.MergeEngine.seriesWipes(events)
-    val plan = planOf(graft.operators.MergeEngine.netActionsViaJoin(events, wipes))
-    assert(plan.contains("HashAggregate"), plan.take(2000))
-    assert(!plan.contains("SortAggregate"),
-      "fold aggregation must stay all-primitive (struct buffers force SortAggregate)")
-    assert(!plan.contains("Window"), "fold must not use window functions")
-  }
-
-  test("fold=agg (comparison strategy) is the SortAggregate shape it claims to be") {
-    import TestHelpers._
-    val events = eventsDF(spark, Seq(ins(0, "c1", 0, "a")))
-    val plan = planOf(graft.operators.MergeEngine.netActions(events))
-    assert(plan.contains("Aggregate"), plan.take(1000))
-  }
-
   test("fold=window: one sort, a Window node, no aggregate of the payload") {
     import TestHelpers._
     val events = eventsDF(spark, Seq(ins(0, "c1", 0, "a"), upd(1, "c1", 0, "b"), ins(2, "c2", 0, "c")))
     val wipes = broadcast(graft.operators.MergeEngine.seriesWipes(events))
-    val plan = planOf(graft.operators.MergeEngine.netActionsViaWindow(events, wipes))
+    val plan = planOf(graft.operators.MergeEngine.netActions(events, wipes))
     assert(plan.contains("Window"), plan.take(2000))
     assert(!plan.contains("SortAggregate"),
-      "the window fold exists to avoid the agg fold's partial+final payload sorts")
-    // exactly one Sort of the batch (the window's); the agg fold plans two
+      "the window fold exists to avoid a struct aggregate's partial+final payload sorts")
+    // exactly one Sort of the batch (the window's)
     val sorts = plan.linesIterator.count(_.trim.matches("""\(\d+\) Sort(?:\s.*)?"""))
     assert(sorts == 1, s"expected 1 Sort, got $sorts:\n${plan.take(3000)}")
     // row_number and the anchor max share ONE WindowExec (CollapseWindow
@@ -70,27 +52,6 @@ class PlanSpec extends SparkSuite {
     assert(windows == 1, s"expected 1 Window node, got $windows:\n${plan.take(3000)}")
   }
 
-  test("fold=window equals fold=agg on net actions (both alignments)") {
-    import TestHelpers._
-    val evs = Seq(
-      ins(0, "c1", 0, "a"), upd(1, "c1", 0, "b"), del(2, "c1", Some(0)),
-      ins(3, "c2", 1, "x"), upd(4, "c2", 1, "y"), ins(5, "c3", 0, "z"),
-      del(6, "c3", None), ins(7, "c3", 1, "w"), upd(8, "c4", 2, "u"),
-      ups(9, "c5", 0, "v"), del(10, "c5", Some(0)), upd(11, "c5", 0, "ghost"),
-      // duplicate delivery of an identical row: either pick is the same row
-      ins(3, "c2", 1, "x"))
-    val events = eventsDF(spark, evs)
-    val wipes = broadcast(graft.operators.MergeEngine.seriesWipes(events))
-    val agg = graft.operators.MergeEngine.netActions(events, wipes)
-      .orderBy("conv_id", "turn_idx").collect().map(_.toString).toSeq
-    val win = graft.operators.MergeEngine.netActionsViaWindow(events, wipes)
-      .orderBy("conv_id", "turn_idx").collect().map(_.toString).toSeq
-    val winB = graft.operators.MergeEngine.netActionsViaWindow(events, wipes, Some(8))
-      .drop("bucket").orderBy("conv_id", "turn_idx").collect().map(_.toString).toSeq
-    assert(agg == win, s"agg:    $agg\nwindow: $win")
-    assert(agg == winB, s"agg:      $agg\nwindow/b: $winB")
-  }
-
   test("bucket-aligned fold: the payload crosses exactly ONE exchange") {
     import TestHelpers._
     val events = eventsDF(spark, Seq(ins(0, "c1", 0, "a"), upd(1, "c1", 0, "b"), ins(2, "c2", 0, "c")))
@@ -98,9 +59,9 @@ class PlanSpec extends SparkSuite {
     val df = graft.operators.MergeEngine.netActions(events, wipes, Some(8))
     val plan = planOf(df)
     // the one REPARTITION_BY_NUM exchange onto the bucket key; no
-    // ENSURE_REQUIREMENTS exchange may reappear for the fold agg —
+    // ENSURE_REQUIREMENTS exchange may reappear for the fold's window —
     // HashPartitioning(bucket) satisfies its ClusteredDistribution
-    // because bucket is one of the grouping keys
+    // because bucket is a prefix of the partition spec
     val shuffles = plan.linesIterator.filter(l =>
       l.trim.startsWith("Arguments: hashpartitioning")).toSeq
     assert(shuffles.size == 1, s"expected 1 shuffle, got:\n${shuffles.mkString("\n")}\n${plan.take(3000)}")
@@ -113,7 +74,10 @@ class PlanSpec extends SparkSuite {
     val evs = Seq(
       ins(0, "c1", 0, "a"), upd(1, "c1", 0, "b"), del(2, "c1", Some(0)),
       ins(3, "c2", 1, "x"), upd(4, "c2", 1, "y"), ins(5, "c3", 0, "z"),
-      del(6, "c3", None), ins(7, "c3", 1, "w"), upd(8, "c4", 2, "u"))
+      del(6, "c3", None), ins(7, "c3", 1, "w"), upd(8, "c4", 2, "u"),
+      ups(9, "c5", 0, "v"), del(10, "c5", Some(0)), upd(11, "c5", 0, "ghost"),
+      // duplicate delivery of an identical row: either pick is the same row
+      ins(3, "c2", 1, "x"))
     val events = eventsDF(spark, evs)
     val wipes = broadcast(graft.operators.MergeEngine.seriesWipes(events))
     val keyed = graft.operators.MergeEngine.netActions(events, wipes)
@@ -145,7 +109,7 @@ class PlanSpec extends SparkSuite {
     val d = tmpDir("planspec-scan")
     eventsDF(spark, Seq(ins(0, "c1", 0, "a"))).write.parquet(s"$d/ev")
     val fromDisk = spark.read.parquet(s"$d/ev")
-    // the exact MOR-path narrow planning aggregate (r06): no _error
+    // the exact narrow planning aggregate of CdcApply (r06): no _error
     // reference anywhere — an aggregate touching _error reads the WHOLE
     // after struct (IsNull over a struct defeats nested-schema pruning),
     // which is why the rejected count moved to an observed metric on the
@@ -155,9 +119,10 @@ class PlanSpec extends SparkSuite {
     val readSchema = plan.linesIterator.find(_.trim.startsWith("ReadSchema")).getOrElse("")
     assert(!readSchema.contains("after"),
       s"narrow planning scan must not read the after struct at all: $readSchema")
-    // and the narrow wipe aggregate stays off the payload too
+    // and the narrow wipe aggregate, built exactly as CdcApply builds it
+    // under the default spec, stays off the payload too
     val wipePlan = planOf(graft.operators.MergeEngine.seriesWipes(
-      fromDisk.filter(col("conv_id").isNotNull)))
+      graft.operators.CdcApply.wipeEvents(fromDisk)))
     val wipeRead = wipePlan.linesIterator.find(_.trim.startsWith("ReadSchema")).getOrElse("")
     assert(!wipeRead.contains("after"),
       s"wipe aggregate scan must not read the after struct: $wipeRead")

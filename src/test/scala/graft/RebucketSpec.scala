@@ -108,13 +108,13 @@ class RebucketSpec extends SparkSuite {
   }
 
   test("COW fence holds when every touched bucket is empty on both sides of the rebucket") {
-    // The adversarial case for the per-bucket stale check: a COW batch of
+    // The adversarial case for a per-bucket stale check: a COW batch of
     // BRAND-NEW conversations whose buckets hold no files under the old
-    // layout NOR under the rebucketed parent's. The file-list comparison
-    // sees None == None for every touched bucket, so only the commit
-    // callback's numBuckets fence can catch the race — without it the
-    // old-layout staged files would publish into a new-layout snapshot
-    // and bucket-pruned reads would miss the rows.
+    // layout NOR under the rebucketed parent's. A file-list comparison
+    // would see None == None for every touched bucket; the apply's
+    // numBuckets fence (the delta write's, which COW shares) must catch
+    // the race — otherwise old-layout staged files would publish into a
+    // new-layout snapshot and bucket-pruned reads would miss the rows.
     val dir = tmpDir("rebucket-cow-empty") + "/t"
     val t = IceLite.create(dir, turnSchema, 4)
     val spec = MergeSpec(mergeStrategy = "cow")

@@ -217,13 +217,29 @@ class Scd2Spec extends SparkSuite {
     assert(eng == oracleHistory(src, 2L, src.currentVersion))
   }
 
-  test("cow targets and append-commit source ranges are rejected") {
+  test("cow history targets track the source; append-commit source ranges are rejected") {
+    // a cow history target refreshes like a mor one and stays delta-free
+    val ks = IceLite.create(tmpDir("scd2-cow-src") + "/t", turnSchema, 4)
+    val hc = IceLite.create(tmpDir("scd2-cow-h") + "/t", Scd2History.historySchema(turnSchema), 4)
+    val cow = MergeSpec(mergeStrategy = "cow")
+    val bootV = Seq(
+      Seq(ins(0, "c1", 0, "a"), ins(1, "c2", 0, "b")),
+      Seq(upd(2, "c1", 0, "a2"), del(3, "c2", None), ins(4, "c2", 1, "b1")),
+      Seq(del(5, "c1", Some(0)), ups(6, "c2", 1, "b2"))).zipWithIndex.map { case (b, i) =>
+      CdcApply.applyBatch(spark, ks, eventsDF(spark, b), spec = mor, epoch = Some(("s", i.toLong)))
+      val r = Scd2History.refresh(spark, ks, hc, cow)
+      assert(!r.result.skipped && hc.deltaFiles().isEmpty, s"refresh $i")
+      val cur = Scd2History.currentState(spark, hc).collect().map(_.toSeq).toSeq.sortBy(_.toString)
+      assert(cur == ks.read(spark).collect().map(_.toSeq).toSeq.sortBy(_.toString), s"refresh $i")
+      r.toVersion
+    }.head
+    val engCow = engineHistory(hc)
+    assertWellFormed(engCow)
+    assert(engCow == oracleHistory(ks, bootV, ks.currentVersion))
+
     val src = IceLite.create(tmpDir("scd2-rej-src") + "/t",
       graft.operators.EventLogApply.logSchema(turnSchema), 4)
     val h = IceLite.create(tmpDir("scd2-rej-h") + "/t", Scd2History.historySchema(turnSchema), 4)
-    val e1 = intercept[IllegalArgumentException](
-      Scd2History.refresh(spark, src, h, MergeSpec(mergeStrategy = "cow")))
-    assert(e1.getMessage.contains("merge-on-read"))
     // an append-only event-log commit in range is not a keyed-state source
     graft.operators.EventLogApply.appendBatch(spark, src,
       eventsDF(spark, Seq(ins(0, "c1", 0, "a"), ins(1, "c1", 0, "b"))))
